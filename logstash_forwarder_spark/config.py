@@ -31,7 +31,6 @@ class EngineConfig:
     source_fields: dict[str, dict[str, str]] = field(default_factory=dict)
     timeout_sec: int = DEFAULT_TIMEOUT_SEC
     dead_time: str = DEFAULT_DEAD_TIME
-    salt_buckets: int = 64
 
 
 def discover_configs(path: str) -> list[str]:
@@ -118,7 +117,6 @@ def finalize_config(merged: dict) -> EngineConfig:
         },
         timeout_sec=int(merged.get("timeout_sec", DEFAULT_TIMEOUT_SEC)),
         dead_time=str(merged.get("dead_time", DEFAULT_DEAD_TIME)),
-        salt_buckets=int(merged.get("salt_buckets", 64)),
     )
     return cfg
 

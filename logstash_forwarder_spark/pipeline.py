@@ -5,8 +5,14 @@ One logical run = one envelope/ack cycle of the reference
 
 * **Single input pass.** The routed stream is written ONCE with
   ``partitionBy("sink")`` into a staging dir — K sinks do not mean K scans
-  of a 100 TB input. Lineage and the north-rule aggregates are then computed
-  from the staged columnar data, reading only the few columns they need.
+  of a 100 TB input.
+* **One aggregate, no read-back.** One executor-side groupBy over the
+  staged data, at (sink, part_id, source) grain, writes each sink's commit
+  record. Lineage is its roll-up over source; ``_metrics`` is a driver-side
+  roll-up over part_id of this run's committed records, so published data
+  is never read again and a resumed run reuses earlier commits' records.
+  ``part_id`` (the input partition) spreads a hot source across groups the
+  way a salt would.
 * **Checkpoint anti-filter.** On resume, sinks already committed for this
   ``run_id`` are excluded *before* the staging write (O-X3's left-anti join,
   degenerated to an ``isin`` filter because the commit key is the sink) —
@@ -22,7 +28,8 @@ One logical run = one envelope/ack cycle of the reference
   partition dirs and commits each sink by atomically swapping ONE small
   manifest file readers resolve through (plans/manifest.py) — the
   Iceberg-style protocol for S3/GCS, proven rename-free by a shim that
-  forbids directory renames (tests/test_manifest_commit.py).
+  forbids directory renames (tests/test_manifest_commit.py). ``_metrics``
+  is published by file replace in both modes.
 """
 
 from __future__ import annotations
@@ -37,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import default_routes
-from .operators.aggregate import sink_source_counts
 from .operators.enrich import enrich_stage
 from .operators.parse import parse_stage
 from .operators.route import route_stage, sink_names
@@ -53,7 +59,6 @@ class PipelineSpec:
     out_dir: str
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     routes: list[tuple[int, str, str]] = field(default_factory=default_routes)
-    salt_buckets: int = 64
     # "rename": atomic directory rename per sink (POSIX-only, the default
     # here — no object store in this sandbox). "manifest": data files are
     # written once in place and a small per-sink manifest file is the commit
@@ -95,23 +100,6 @@ def build_plan(
     return route_stage(enriched, spec.routes)
 
 
-def _phase_logger():
-    """Optional stderr phase timing (``SPARK_GRAFT_PHASE_LOG=1``) — the
-    bench-decomposition instrument; a no-op unless explicitly enabled."""
-    if not os.environ.get("SPARK_GRAFT_PHASE_LOG"):
-        return lambda name: None
-    import sys
-
-    state = {"t": time.monotonic()}
-
-    def mark(name: str) -> None:
-        now = time.monotonic()
-        print(f"# phase {name}: {now - state['t']:.2f}s", file=sys.stderr)
-        state["t"] = now
-
-    return mark
-
-
 def run_pipeline(
     spark: SparkSession,
     sequences: DataFrame,
@@ -119,7 +107,6 @@ def run_pipeline(
     spec: PipelineSpec,
 ) -> RunResult:
     t0 = time.monotonic()
-    phase = _phase_logger()
     reg = Registrar(os.path.join(spec.out_dir, "_checkpoint"))
     all_sinks = sink_names(spec.routes)
     done = reg.committed_sinks(spec.run_id)
@@ -173,37 +160,23 @@ def run_pipeline(
             # fields is map<string,string>: fine for parquet; keep full row
             # for routed-row equality checks downstream.
             routed.write.partitionBy("sink").parquet(staging)
-            phase("staging_write")
             has_staged = any(
                 d.startswith("sink=") for d in os.listdir(staging)
             )  # zero routed rows → only _SUCCESS; parquet read would fail
             staged = spark.read.parquet(staging) if has_staged else None
 
-        phase("staging_read_setup")
         lineage_staging = os.path.join(run_dir, "_lineage_staging")
         shutil.rmtree(lineage_staging, ignore_errors=True)
         lineage_files: dict[str, str] = {}
         if staged is not None:
-            # per-partition lineage, one columnar scan, WRITTEN BY EXECUTORS
-            # — the driver never materializes a row per input partition
-            # (a toPandas() here scales with partition count; VERDICT r1 #6).
-            # repartition(1) funnels the metadata-sized relation through one
-            # executor so partitionBy yields exactly one file per sink.
+            # the commit records, WRITTEN BY EXECUTORS — the driver never
+            # materializes a row per input partition (a toPandas() here
+            # scales with partition count; VERDICT r1 #6). repartition(1)
+            # funnels the metadata-sized relation through one executor so
+            # partitionBy yields exactly one file per sink.
             (
-                staged.groupBy("sink", "part_id")
-                .agg(
-                    F.count(F.lit(1)).alias("row_count"),
-                    F.coalesce(F.sum("n_tok"), F.lit(0)).alias("token_total"),
-                )
-                .select(
-                    F.lit(spec.run_id).alias("run_id"),
-                    F.col("sink"),
-                    F.col("part_id").cast("int").alias("partition_id"),
-                    F.col("row_count").cast("long"),
-                    F.col("token_total").cast("long"),
-                    F.current_timestamp().alias("committed_at"),
-                    F.col("sink").alias("sink_part"),
-                )
+                Registrar.records_of(staged, spec.run_id)
+                .withColumn("sink_part", F.col("sink"))
                 .repartition(1)
                 .write.partitionBy("sink_part")
                 .parquet(lineage_staging)
@@ -218,7 +191,7 @@ def run_pipeline(
                     if f.endswith(".parquet")
                 ]
                 lineage_files[sink] = os.path.join(lineage_staging, d, parts[0])
-            # rows_staged from the metadata-sized lineage files, summed
+            # rows_staged from the metadata-sized record files, summed
             # DRIVER-SIDE with pyarrow (the per-sink file list is already
             # in hand) — not a second staged-data scan, and since r8 not
             # even a Spark job (the read-back + agg cost a whole job for
@@ -227,7 +200,6 @@ def run_pipeline(
                 pq_read_column_sum(f, "row_count")
                 for f in lineage_files.values()
             )
-            phase("lineage")
 
         n_committed = 0
         for sink in todo:
@@ -261,7 +233,7 @@ def run_pipeline(
                     committed.append(sink)
                     continue
                 os.replace(src, dst)  # atomic publish = the ack (O-R5)
-                # checkpoint = adopting the executor-written lineage file
+                # checkpoint = adopting the executor-written record file
                 reg.commit_file(spec.run_id, sink, lineage_files[sink])
             committed.append(sink)
             n_committed += 1
@@ -280,15 +252,12 @@ def run_pipeline(
         shutil.rmtree(staging, ignore_errors=True)
         shutil.rmtree(os.path.join(run_dir, "_lineage_staging"), ignore_errors=True)
 
-    phase("commits")
-    # north-rule metrics: per-sink/per-source counts + token totals (salted)
-    published = _published_sources(run_dir, all_sinks)
+    # north-rule metrics: per-(sink, source) counts + token totals, rolled
+    # up from every committed record of this run (earlier attempts' too)
     metrics_path = os.path.join(run_dir, "_metrics")
-    if published:
-        routed_back = spark.read.option("basePath", run_dir).parquet(*published)
-        metrics = sink_source_counts(routed_back, salt_buckets=spec.salt_buckets)
-        metrics.write.mode("overwrite").parquet(metrics_path)
-        phase("metrics")
+    totals = reg.source_totals(spec.run_id)
+    if totals.num_rows:
+        _publish_metrics(totals, metrics_path)
 
     return RunResult(
         run_id=spec.run_id,
@@ -307,6 +276,18 @@ def pq_read_column_sum(path: str, column: str) -> int:
 
     t = pq.read_table(path, columns=[column])
     return int(pc.sum(t.column(column)).as_py() or 0)
+
+
+def _publish_metrics(totals, metrics_path: str) -> None:
+    """Write ``_metrics`` as one parquet file moved in by file replace —
+    no directory rename, so manifest mode stays rename-free."""
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(metrics_path, ignore_errors=True)
+    os.makedirs(metrics_path)
+    tmp = os.path.join(metrics_path, f".tmp-{uuid.uuid4().hex}.parquet")
+    pq.write_table(totals, tmp)
+    os.replace(tmp, os.path.join(metrics_path, "part-00000.parquet"))
 
 
 def _published_sources(run_dir: str, sinks) -> list[str]:

@@ -5,7 +5,9 @@ write-temp-then-atomic-rename (/root/reference/registrar.go:38-51,
 registrar_other.go:9-15) and, only after the ack, folds acked events into it
 (/root/reference/publisher1.go:126). Here the same trick backs a parquet
 metadata table: each sink commit appends one immutable parquet file of
-per-partition lineage rows, published with ``os.replace`` (atomic on POSIX).
+per-(partition, source) records, published with ``os.replace`` (atomic on
+POSIX). The records are the run's only aggregate: lineage is their roll-up
+over source, the run's ``_metrics`` their roll-up over partition.
 Iceberg's metadata swap would give this for free; the parquet+rename
 fallback keeps the identical interface without the runtime jar (SURVEY
 §7.3 hard part 5).
@@ -39,6 +41,20 @@ _ARROW_SCHEMA = pa.schema(
         pa.field("committed_at", pa.timestamp("us", tz="UTC"), nullable=False),
     ]
 )
+# A commit record: one lineage row split by source, plus its max token
+# count. ``source`` is null in empty-sink markers (partition_id = -1) and
+# in commit files written before records carried it.
+_RECORD_SCHEMA = _ARROW_SCHEMA.append(pa.field("source", pa.string())).append(
+    pa.field("max_tokens", pa.int64())
+)
+
+
+def _roll_up(t: pa.Table, keys: list[str], aggs: dict[str, str]) -> pa.Table:
+    """Group ``t`` by ``keys``, aggregating each column named in ``aggs``
+    with its function; output columns keep their input names."""
+    rolled = t.group_by(keys, use_threads=False).aggregate(list(aggs.items()))
+    names = {f"{c}_{fn}": c for c, fn in aggs.items()}
+    return rolled.rename_columns([names.get(c, c) for c in rolled.column_names])
 
 
 @dataclass(frozen=True)
@@ -62,7 +78,8 @@ class Registrar:
     # -- write side (driver-only, metadata-sized) ---------------------------
 
     def commit(self, run_id: str, sink: str, lineage: list[LineageRow]) -> str:
-        """Atomically record a sink commit. Idempotent: re-commit overwrites."""
+        """Atomically record a sink commit. Idempotent: re-commit overwrites.
+        Driver-written rows carry no per-source split (null ``source``)."""
         now = datetime.now(timezone.utc)
         table = pa.Table.from_pydict(
             {
@@ -75,17 +92,43 @@ class Registrar:
             },
             schema=_ARROW_SCHEMA,
         )
+        table = self._records(table)
         final = os.path.join(self.path, self._commit_name(run_id, sink))
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, tmp)
         os.replace(tmp, final)  # registrar_other.go:9-15, reborn
         return final
 
+    @staticmethod
+    def records_of(staged: DataFrame, run_id: str) -> DataFrame:
+        """The commit records of a run's routed rows: one aggregate at
+        (sink, part_id, source) grain with the columns of
+        ``_RECORD_SCHEMA``. Each sink's rows, written to one parquet file,
+        are what :meth:`commit_file` adopts."""
+        from pyspark.sql import functions as F
+
+        agg = staged.groupBy("sink", "part_id", "source").agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.coalesce(F.sum("n_tok"), F.lit(0)).cast("long").alias("token_total"),
+            F.max("n_tok").cast("long").alias("max_tokens"),
+        )
+        return agg.select(
+            F.lit(run_id).alias("run_id"),
+            "sink",
+            F.col("part_id").cast("int").alias("partition_id"),
+            "row_count",
+            "token_total",
+            F.current_timestamp().alias("committed_at"),
+            "source",
+            "max_tokens",
+        )
+
     def commit_file(self, run_id: str, sink: str, src_path: str) -> str:
-        """Atomically adopt an executor-written lineage parquet file as this
-        (run_id, sink)'s commit — the zero-driver-materialization path: the
-        lineage rows never exist driver-side, only the rename does.
-        Idempotent like commit(): re-adoption overwrites."""
+        """Atomically adopt an executor-written record file (the columns of
+        ``_RECORD_SCHEMA``) as this (run_id, sink)'s commit — the
+        zero-driver-materialization path: the records never exist
+        driver-side, only the rename does. Idempotent like commit():
+        re-adoption overwrites."""
         final = os.path.join(self.path, self._commit_name(run_id, sink))
         os.replace(src_path, final)
         return final
@@ -158,60 +201,74 @@ class Registrar:
 
     def committed_sinks(self, run_id: str) -> set[str]:
         """O-X3 resume input: which sinks of this run are already done."""
-
-        def read() -> set[str]:
-            done: set[str] = set()
-            files, idx = self._live_and_index()
-            for f in files:
-                t = pq.read_table(f, columns=["run_id", "sink"])
-                for rid, sink in zip(
-                    t.column("run_id").to_pylist(), t.column("sink").to_pylist()
-                ):
-                    if rid == run_id:
-                        done.add(sink)
-            if idx is not None:
-                for rid, sink in zip(
-                    idx.column("run_id").to_pylist(), idx.column("sink").to_pylist()
-                ):
-                    if rid == run_id:
-                        done.add(sink)
-            return done
-
-        return self._with_compaction_retry(read)
+        return set(self._commits(run_id).column("sink").to_pylist())
 
     @staticmethod
-    def _read_commit(f: str) -> pa.Table:
-        """Read one commit file normalized to the registrar schema — commit
-        files come from two writers (driver pyarrow for empty sinks,
-        executor Spark for data sinks) whose physical types differ slightly
-        (e.g. timestamp unit/tz), so cast on read."""
-        t = pq.read_table(f)
-        return t.select([f_.name for f_ in _ARROW_SCHEMA]).cast(_ARROW_SCHEMA)
+    def _records(t: pa.Table, schema: pa.Schema = _RECORD_SCHEMA) -> pa.Table:
+        """Normalize commit rows to ``schema`` — commit files come from two
+        writers (driver pyarrow for empty sinks, executor Spark for data
+        sinks) whose physical types differ slightly (e.g. timestamp
+        unit/tz), and files from before records carried ``source`` and
+        ``max_tokens`` lack those columns (read as null)."""
+        for f_ in schema:
+            if f_.name not in t.column_names:
+                t = t.append_column(f_, pa.nulls(t.num_rows, f_.type))
+        return t.select(schema.names).cast(schema)
 
-    def lineage(self, run_id: str | None = None) -> pa.Table:
+    def _commits(self, run_id: str | None = None) -> pa.Table:
+        """Every commit record, or only ``run_id``'s: the live commit files
+        (for one run, only those named for it) plus the index rows no live
+        file overrides."""
+        import pyarrow.compute as pc
+
         def read() -> pa.Table:
             files, idx = self._live_and_index()
-            parts = [self._read_commit(f) for f in files]
-            if idx is not None and idx.num_rows:
-                parts.append(
-                    idx.select([f_.name for f_ in _ARROW_SCHEMA]).cast(_ARROW_SCHEMA)
-                )
-            if not parts:
-                return _ARROW_SCHEMA.empty_table()
-            return pa.concat_tables(parts)
+            if run_id is not None:
+                prefix = f"{_safe(run_id)[:32]}__"
+                files = [f for f in files if os.path.basename(f).startswith(prefix)]
+            parts = [self._records(pq.read_table(f)) for f in files]
+            if idx is not None:
+                parts.append(self._records(idx))
+            return pa.concat_tables(parts or [_RECORD_SCHEMA.empty_table()])
 
         t = self._with_compaction_retry(read)
         if run_id is not None:
-            import pyarrow.compute as pc
-
             t = t.filter(pc.equal(t.column("run_id"), run_id))
         return t
+
+    def lineage(self, run_id: str | None = None) -> pa.Table:
+        """One row per (run_id, sink, partition_id) commit: the records
+        rolled up over source."""
+        rolled = _roll_up(
+            self._commits(run_id),
+            ["run_id", "sink", "partition_id", "committed_at"],
+            {"row_count": "sum", "token_total": "sum"},
+        )
+        return self._records(rolled, _ARROW_SCHEMA)
+
+    def source_totals(self, run_id: str) -> pa.Table:
+        """Per-(sink, source) ``row_count``, ``token_total`` and
+        ``max_tokens`` of ``run_id``'s commits, sorted by (sink, source):
+        the records rolled up over partition. Empty-sink markers and
+        records without a source contribute nothing."""
+        import pyarrow.compute as pc
+
+        t = self._commits(run_id)
+        rolled = _roll_up(
+            t.filter(pc.is_valid(t.column("source"))),
+            ["sink", "source"],
+            {"row_count": "sum", "token_total": "sum", "max_tokens": "max"},
+        )
+        return rolled.select(
+            ["sink", "source", "row_count", "token_total", "max_tokens"]
+        ).sort_by([("sink", "ascending"), ("source", "ascending")])
 
     def load(self, spark: SparkSession) -> DataFrame:
         """The checkpoint table as a DataFrame (for anti-join resume plans).
 
         Materialized driver-side from ``lineage()`` (registrar state is
-        metadata-sized by design — one row per run × sink × partition): a
+        metadata-sized by design — one lineage row per run × sink ×
+        partition, rolled up from the records): a
         ``spark.read.parquet(*files)`` here would race a concurrent
         ``compact()``'s file deletions at JVM scan time, past the Python
         retry's reach."""
@@ -227,7 +284,7 @@ class Registrar:
     def compact(self, *, delete_covered: bool = True) -> int:
         """Fold every commit file into ONE atomically-swapped index parquet
         (`_index.parquet`) — Iceberg's manifest-list compaction for this
-        layout. All lineage rows AND snapshot identity (snapshot_id from
+        layout. All commit records AND snapshot identity (snapshot_id from
         the commit filename, committed_at from the rows) are preserved, so
         resume, lineage audits, `snapshots()` ordering and time travel are
         unchanged — asserted equal in tests. With ``delete_covered`` the
@@ -246,7 +303,7 @@ class Registrar:
         prev = self._index_table()
         parts = []
         for f in files:
-            t = self._read_commit(f)
+            t = self._records(pq.read_table(f))
             parts.append(
                 t.append_column(
                     "snapshot_id", pa.array([self._sid_of(f)] * t.num_rows)
@@ -267,10 +324,8 @@ class Registrar:
             parts.append(prev)
         if not parts:
             return 0
-        idx_schema = _ARROW_SCHEMA.append(pa.field("snapshot_id", pa.string()))
-        merged = pa.concat_tables(
-            [p.select([f_.name for f_ in idx_schema]).cast(idx_schema) for p in parts]
-        )
+        idx_schema = _RECORD_SCHEMA.append(pa.field("snapshot_id", pa.string()))
+        merged = pa.concat_tables([self._records(p, idx_schema) for p in parts])
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}.parquet")
         pq.write_table(merged, tmp)
         os.replace(tmp, self._index_path())

@@ -371,40 +371,13 @@ def main(argv: list[str] | None = None) -> int:
         # one-shot wire-ship: harvest → lumberjack socket, no parquet
         # sinks. (With --tail-glob the SAME flag turns the tail loop into
         # the reference's literal daemon — see _tail_loop.)
-        import socket as _socket
-
-        from .operators.lumberjack_net import publish_lumberjack
         from .sources.textlog import harvest_text_files
 
         if not args.text_glob:
             p.error("--ship-lumberjack requires --text-glob or --tail-glob")
         host, _, port_s = args.ship_lumberjack.rpartition(":")
-        events = (
-            harvest_text_files(spark, args.text_glob)
-            .filter("is_complete")
-            .select(
-                "file",
-                F.lit(_socket.gethostname()).alias("host"),
-                F.col("byte_offset").cast("string").alias("offset"),
-                "line",
-            )
-        )
-        stats = publish_lumberjack(
-            events,
-            host,
-            int(port_s),
-            pair_cols=["file", "host", "offset", "line"],
-            order_col="offset",
-        )
-        print(
-            json.dumps(
-                {
-                    "shipped": sum(s["n_events"] for s in stats),
-                    "acked": sum(s["acked"] for s in stats),
-                    "connections": len(stats),
-                }
-            )
-        )
+        stats = _ship_lines(harvest_text_files(spark, args.text_glob), host, int(port_s))
+        print(json.dumps({**_ship_summary(stats), "connections": len(stats)}))
         return 0
 
     if args.tail and not args.conf:
@@ -461,6 +434,37 @@ def main(argv: list[str] | None = None) -> int:
         )
     )
     return 0
+
+
+def _ship_lines(harvested, host: str, port: int) -> list[dict]:
+    """Ship harvested complete lines as lumberjack events (file, host,
+    offset, line). Each connection sends its lines in numeric
+    ``byte_offset`` order; the offset is a string only on the wire."""
+    import socket
+
+    from .operators.lumberjack_net import publish_lumberjack
+
+    events = harvested.filter("is_complete").select(
+        "byte_offset",
+        "file",
+        F.lit(socket.gethostname()).alias("host"),
+        F.col("byte_offset").cast("string").alias("offset"),
+        "line",
+    )
+    return publish_lumberjack(
+        events,
+        host,
+        port,
+        pair_cols=["file", "host", "offset", "line"],
+        order_col="byte_offset",
+    )
+
+
+def _ship_summary(stats: list[dict]) -> dict:
+    return {
+        "shipped": sum(s["n_events"] for s in stats),
+        "acked": sum(s["acked"] for s in stats),
+    }
 
 
 def _harvest_from_conf(spark, conf_path: str):
@@ -664,27 +668,7 @@ def _tail_loop(spark, args) -> int:
         n_lines = harvested.count()
         rec = {"poll": poll_no, "new_lines": n_lines}
         if n_lines and ship_to is not None:
-            import socket as _socket
-
-            from .operators.lumberjack_net import publish_lumberjack
-
-            events = harvested.filter("is_complete").select(
-                "file",
-                F.lit(_socket.gethostname()).alias("host"),
-                F.col("byte_offset").cast("string").alias("offset"),
-                "line",
-            )
-            stats = publish_lumberjack(
-                events,
-                ship_to[0],
-                ship_to[1],
-                pair_cols=["file", "host", "offset", "line"],
-                order_col="offset",
-            )
-            rec.update(
-                shipped=sum(s["n_events"] for s in stats),
-                acked=sum(s["acked"] for s in stats),
-            )
+            rec.update(_ship_summary(_ship_lines(harvested, *ship_to)))
         elif n_lines:
             # poll identity = counter + CONTENT fingerprint of the poll's
             # resulting offsets: a pure crash-replay reproduces the same id

@@ -33,19 +33,10 @@ SOURCE_DIM_SCHEMA = T.StructType(
     ]
 )
 
-# Routing rules: network.servers random-pick (publisher1.go:168-186) made
-# deterministic — ordered SQL predicates over enriched columns → sink.
-ROUTES_SCHEMA = T.StructType(
-    [
-        T.StructField("priority", T.IntegerType(), False),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("sink", T.StringType(), False),
-    ]
-)
-
 # Checkpoint/lineage metadata: the .logstash-forwarder registrar file
 # (registrar.go:38-51, filestate_linux.go:3-8) reborn as one row per
-# (run_id, sink, partition_id) commit.
+# (run_id, sink, partition_id) — Registrar.lineage()'s roll-up over source
+# of the per-(partition, source) commit records.
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -91,3 +91,14 @@ def oracle_sink_source_counts(routed: pd.DataFrame) -> pd.DataFrame:
         .reset_index(drop=True)
     )
     return g
+
+
+def read_metrics(path: str) -> pd.DataFrame:
+    """A run's ``_metrics`` directory in :func:`oracle_sink_source_counts`'
+    column and row order."""
+    cols = ["sink", "source", "row_count", "token_total", "max_tokens"]
+    return (
+        pd.read_parquet(path)[cols]
+        .sort_values(["sink", "source"])
+        .reset_index(drop=True)
+    )

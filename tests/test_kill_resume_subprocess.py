@@ -43,6 +43,23 @@ def _cli(out_dir: str, run_id: str) -> list[str]:
     ]
 
 
+def _metrics(con, run_dir: str) -> list[tuple]:
+    """The run's ``_metrics`` rows, ordered by (sink, source)."""
+    return con.sql(
+        f"SELECT sink, source, row_count, token_total, max_tokens "
+        f"FROM read_parquet('{run_dir}/_metrics/*.parquet') ORDER BY 1, 2"
+    ).fetchall()
+
+
+def _source_totals(con, files: str) -> list[tuple]:
+    """Per-(sink, source) totals over published data files, ordered like
+    :func:`_metrics`; ``files`` is a DuckDB glob or list literal."""
+    return con.sql(
+        f"SELECT sink, source, count(*), sum(n_tok), max(n_tok) "
+        f"FROM read_parquet({files}, hive_partitioning=true) GROUP BY ALL ORDER BY 1, 2"
+    ).fetchall()
+
+
 def test_sigkill_mid_publish_then_resume(tmp_path):
     out = str(tmp_path / "out")
     ckpt_glob = os.path.join(out, "_checkpoint", "*.parquet")
@@ -105,6 +122,9 @@ def test_sigkill_mid_publish_then_resume(tmp_path):
     )
     for s in SINKS:
         assert lineage.get(s, 0) == data.get(s, 0), (s, lineage, data)
+    assert _metrics(con, f"{out}/run_id=killrun") == _source_totals(
+        con, f"'{out}/run_id=killrun/sink=*/*.parquet'"
+    )
     # no stale staging dirs survive a completed resume
     assert not os.path.exists(f"{out}/run_id=killrun/_staging")
     assert not os.path.exists(f"{out}/run_id=killrun/_lineage_staging")
@@ -186,3 +206,4 @@ def test_sigkill_manifest_mode_then_resume(tmp_path):
     )
     for s in SINKS:
         assert lineage.get(s, 0) == per_sink_manifest[s], (s, lineage, per_sink_manifest)
+    assert _metrics(con, run_dir) == _source_totals(con, repr(manifest_files))

@@ -164,6 +164,25 @@ def test_tls_roundtrip(spark, tmp_path):
         server.close()
 
 
+@pytest.mark.parametrize("mode", ["text_glob", "tail_glob"])
+def test_cli_ships_in_byte_order(spark, tmp_path, server, capsys, mode):
+    """Both CLI ship paths send a file's lines in byte order. The wire
+    offset is a string, and "100" sorts before "99" as text, so the lines
+    at offsets 99 and 100 catch a sort on the wire column."""
+    from logstash_forwarder_spark.run import main
+
+    log = tmp_path / "order.log"
+    log.write_bytes(b"a" * 98 + b"\n" + b"\n" + b"c\n")  # offsets 0, 99, 100
+    argv = [
+        f"--{mode.replace('_', '-')}", str(log), "--out", str(tmp_path / "out"),
+        "--ship-lumberjack", f"{server.host}:{server.port}",
+    ]
+    assert main(argv + (["--polls", "1"] if mode == "tail_glob" else [])) == 0
+    capsys.readouterr()
+    assert [e["offset"] for e in server.events] == ["0", "99", "100"]
+    assert [e["line"] for e in server.events] == ["a" * 98, "", "c"]
+
+
 def test_read_frames_matches_batch_decoder(tmp_path):
     """The incremental socket reader and the batch decode_stream agree
     on the same payload bytes (golden interop within the codec)."""

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +23,8 @@ from logstash_forwarder_spark.pipeline import (
 )
 from logstash_forwarder_spark.plans.manifest import read_manifest
 from logstash_forwarder_spark.plans.registrar import Registrar, SnapshotLog
+
+from .oracle import oracle_pipeline, oracle_sink_source_counts, read_metrics
 
 N = 2_000
 
@@ -95,6 +98,12 @@ def test_manifest_kill_resume(spark, tmp_out, no_dir_rename):
     n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
     assert (n, nd) == (N, N)
     assert sum(reg.lineage("mk").column("row_count").to_pylist()) == N
+    # _metrics covers every sink, the crashed attempt's commits included
+    dim_map = {r.source: dict(r.fields) for r in dim.collect()}
+    want = oracle_pipeline(seqs.toPandas(), dim_map)
+    pd.testing.assert_frame_equal(
+        read_metrics(res.metrics_path), oracle_sink_source_counts(want), check_dtype=False
+    )
 
 
 def test_manifest_crash_between_publish_and_checkpoint(

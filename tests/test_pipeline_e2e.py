@@ -9,12 +9,13 @@ unicode source, empty array, single token.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
 from logstash_forwarder_spark.schema import SEQUENCES_SCHEMA, SOURCE_DIM_SCHEMA
 
-from .oracle import oracle_pipeline, oracle_sink_source_counts
+from .oracle import oracle_pipeline, oracle_sink_source_counts, read_metrics
 
 GOLDEN_ROWS = [
     # (doc_id, tokens, n_tok, source) — hand-written per FIXTURES.md §5
@@ -84,10 +85,12 @@ def test_golden_e2e(spark, tmp_out):
     ghost = got[got.source == "src_6"].iloc[0]
     assert ghost.fields is None
 
-    # per-sink aggregate-count equality
-    got_counts = oracle_sink_source_counts(got)
-    want_counts = oracle_sink_source_counts(want)
-    pd.testing.assert_frame_equal(got_counts, want_counts, check_dtype=False)
+    # per-sink aggregate-count equality: the run's own _metrics vs the oracle
+    pd.testing.assert_frame_equal(
+        read_metrics(res.metrics_path),
+        oracle_sink_source_counts(want),
+        check_dtype=False,
+    )
 
 
 def test_e2e_scaled_against_oracle(spark, tmp_out):
@@ -108,6 +111,36 @@ def test_e2e_scaled_against_oracle(spark, tmp_out):
     pd.testing.assert_frame_equal(
         oracle_sink_source_counts(got), oracle_sink_source_counts(want), check_dtype=False
     )
+    # _metrics rolls the per-partition commit records up to (sink, source)
+    pd.testing.assert_frame_equal(
+        read_metrics(res.metrics_path), oracle_sink_source_counts(want), check_dtype=False
+    )
     # skew fixture sanity: src_hot really is hot
     frac = (got.source == "src_hot").mean()
     assert 0.5 < frac < 0.7
+
+
+@pytest.mark.parametrize("commit_mode", ["rename", "manifest"])
+def test_empty_sink_markers_not_in_metrics(spark, tmp_out, commit_mode):
+    """Sinks no row routes to commit a ``partition_id = -1`` marker; the
+    marker is lineage, never a ``_metrics`` row."""
+    from logstash_forwarder_spark.plans.registrar import Registrar
+
+    rows = [r for r in GOLDEN_ROWS if r[3] == "src_1"]  # all sink_apache
+    seqs = spark.createDataFrame(rows, SEQUENCES_SCHEMA)
+    dim = gen_source_dim(spark)
+    spec = PipelineSpec(out_dir=tmp_out, run_id="markers", commit_mode=commit_mode)
+    res = run_pipeline(spark, seqs, dim, spec)
+    assert len(res.sinks_committed) == 4
+
+    lin = Registrar(f"{tmp_out}/_checkpoint").lineage("markers").to_pandas()
+    empty = set(lin[lin.partition_id == -1].sink)
+    assert empty == {"sink_default", "sink_dev", "sink_syslog"}
+
+    dim_map = {r.source: dict(r.fields) for r in dim.collect()}
+    want = oracle_pipeline(seqs.toPandas(), dim_map)
+    got = read_metrics(res.metrics_path)
+    assert set(got.sink) == {"sink_apache"}
+    pd.testing.assert_frame_equal(
+        got, oracle_sink_source_counts(want), check_dtype=False
+    )

@@ -22,7 +22,7 @@ from logstash_forwarder_spark.pipeline import (
 )
 from logstash_forwarder_spark.plans.registrar import LineageRow, Registrar
 
-from .oracle import oracle_pipeline, oracle_sink_source_counts
+from .oracle import oracle_pipeline, oracle_sink_source_counts, read_metrics
 
 N_ROWS = 10_000
 
@@ -61,6 +61,10 @@ def test_kill_after_first_sink_then_resume(spark, tmp_out):
     want = oracle_pipeline(seqs.toPandas(), dim_map)
     pd.testing.assert_frame_equal(
         oracle_sink_source_counts(got), oracle_sink_source_counts(want), check_dtype=False
+    )
+    # _metrics covers every sink, the crashed attempt's commits included
+    pd.testing.assert_frame_equal(
+        read_metrics(res.metrics_path), oracle_sink_source_counts(want), check_dtype=False
     )
 
     # lineage covers every published sink with correct totals

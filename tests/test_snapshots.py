@@ -109,6 +109,13 @@ def test_mixed_writer_commits_sort_and_compare(tmp_path):
     snaps = SnapshotLog(reg).snapshots()
     assert [s.sink for s in snaps] == ["sink_a", "sink_b"]  # 2030 sorts last
     assert all(s.committed_at.tzinfo is not None for s in snaps)
+    # a commit file without per-source columns still reads as lineage, and
+    # adds nothing to the per-source totals
+    lin = reg.lineage("m1")
+    assert sorted(zip(lin["sink"].to_pylist(), lin["row_count"].to_pylist())) == [
+        ("sink_a", 10), ("sink_b", 5),
+    ]
+    assert reg.source_totals("m1").num_rows == 0
 
 
 def test_cross_run_snapshot_cut(spark, tmp_path):
@@ -152,6 +159,8 @@ def test_compaction_preserves_everything(spark, tmp_out):
     before_sinks2 = reg.committed_sinks("snaprun2")
     before_lineage = sorted(map(tuple, reg.lineage().to_pylist()))
     before_load = sorted(map(tuple, reg.load(spark).collect()))
+    before_totals = reg.source_totals("snaprun")
+    assert before_totals.num_rows > 0
     old_snap = log.snapshots()[0]
     before_travel = sorted(
         map(tuple, log.read_as_of(spark, tmp_out, "snaprun",
@@ -168,6 +177,7 @@ def test_compaction_preserves_everything(spark, tmp_out):
     assert reg.committed_sinks("snaprun2") == before_sinks2
     assert sorted(map(tuple, reg.lineage().to_pylist())) == before_lineage
     assert sorted(map(tuple, reg.load(spark).collect())) == before_load
+    assert reg.source_totals("snaprun").equals(before_totals)
     after_travel = sorted(
         map(tuple, log.read_as_of(spark, tmp_out, "snaprun",
                                   snapshot_id=old_snap.snapshot_id).collect())
